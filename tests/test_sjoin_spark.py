@@ -68,15 +68,67 @@ def test_right_join(data, spark):
     assert "index_left" in out.columns
 
 
-def test_on_attribute(data, spark):
+def _attr_eq(a, b):
+    # Spark join-key equality: null never matches, NaN matches NaN
+    if a is None or b is None:
+        return False
+    if a != a and b != b:
+        return True
+    return a == b
+
+
+@pytest.mark.parametrize("how,broadcast_right,two_cols", [
+    ("inner", True, False), ("inner", False, False),
+    ("left", True, False), ("left", False, False),
+    ("left", True, True), ("inner", False, True),
+], ids=["inner-broadcast", "inner-cogroup", "left-broadcast",
+        "left-cogroup", "two_cols-broadcast", "two_cols-cogroup"])
+def test_on_attribute(data, spark, how, broadcast_right, two_cols):
     pdf, tdf, lb, rb = data
-    # add a shared attribute: parity of id
-    p2 = pdf.withColumn("par", F.pmod("pid", F.lit(2)))
-    t2 = tdf.withColumn("par", F.pmod("tid", F.lit(2)))
-    out = sjoin(p2, t2, on_attribute="par", left_id="pid", right_id="tid").toPandas()
-    exp = {(p, t) for (p, t) in brute(lb, rb, "intersects") if p % 2 == t % 2}
-    got = set(zip(out.pid.astype(int), out.index_right.astype(int)))
+    spatial = brute(lb, rb, "intersects")
+    # one spatially matched row per side gets a null attribute
+    null_p = min(p for p, _ in spatial)
+    null_t = max(t for _, t in spatial)
+    # parity of id, plus (two_cols) id mod 3 as a double with one NaN per
+    # side on a pair that matches spatially and on parity
+    nan_p, nan_t = min((p, t) for p, t in spatial
+                       if p % 2 == t % 2 and p != null_p and t != null_t)
+
+    def frame(df, id_col, null_id, nan_id):
+        df = df.withColumn("par", F.when(F.col(id_col) == null_id, None)
+                           .otherwise(F.pmod(id_col, F.lit(2))))
+        if two_cols:
+            df = df.withColumn("m3", F.when(F.col(id_col) == nan_id,
+                                            F.lit(float("nan")))
+                               .otherwise(F.pmod(id_col, F.lit(3))
+                                          .cast("double")))
+        return df
+
+    def attrs(i, null_id, nan_id):
+        a = (None if i == null_id else i % 2,)
+        if two_cols:
+            a += (float("nan") if i == nan_id else float(i % 3),)
+        return a
+
+    cols = ["par", "m3"] if two_cols else "par"
+    out = sjoin(frame(pdf, "pid", null_p, nan_p),
+                frame(tdf, "tid", null_t, nan_t), how=how,
+                on_attribute=cols, left_id="pid", right_id="tid",
+                broadcast_right=broadcast_right).toPandas()
+    exp = {(p, t) for p, t in spatial
+           if all(_attr_eq(a, b) for a, b in zip(attrs(p, null_p, nan_p),
+                                                 attrs(t, null_t, nan_t)))}
+    assert (null_p, null_t) not in exp and len(exp) > 5
+    if two_cols:
+        assert (nan_p, nan_t) in exp
+    hit = out[out.index_right.notna()]
+    got = set(zip(hit.pid.astype(int), hit.index_right.astype(int)))
     assert got == exp
+    assert len(hit) == len(exp)
+    if how == "left":
+        # every left row survives; rows without a match are null-padded
+        assert set(out.pid.astype(int)) == set(range(NPTS))
+        assert len(out) - len(hit) == NPTS - len({p for p, _ in exp})
 
 
 def test_salted_join_same_result(data, spark):
