@@ -80,11 +80,6 @@ def _signed_area(p0, p1, p2):
     return (p0[0] - p2[0]) * (p1[1] - p2[1]) - (p1[0] - p2[0]) * (p0[1] - p2[1])
 
 
-def _event_cmp_key(e: _Event):
-    # processing order: x, then y, then right before left, then bottom seg
-    return ()
-
-
 def _compare_events(e1: _Event, e2: _Event) -> bool:
     """True if e1 should be processed AFTER e2 (i.e. e1 > e2)."""
     if e1.p[0] > e2.p[0]:

@@ -778,17 +778,6 @@ def pairwise_boolean(lb: GeometryBatch, rb: GeometryBatch, op: str) -> GeometryB
     return out.finish()
 
 
-def _single_ring(b: GeometryBatch, g: int) -> np.ndarray | None:
-    """The exterior ring if geometry g is a single-part no-hole polygon."""
-    p0, p1 = b.geom_part_off[g], b.geom_part_off[g + 1]
-    if p1 - p0 != 1 or b.part_types[p0] != POLYGON:
-        return None
-    rings = b.part_rings(p0)
-    if len(rings) != 1:
-        return None
-    return rings[0]
-
-
 def _all_poly_rings(b: GeometryBatch, g: int):
     """([exterior+hole rings...], ) of all polygon parts of g."""
     rings = []

@@ -249,13 +249,6 @@ def _covered_length(a: GeometryBatch, ga: int, b: GeometryBatch,
     return total, covered
 
 
-def _dim_char(*present) -> str:
-    for dim, flag in sorted(present, reverse=True):
-        if flag:
-            return str(dim)
-    return "F"
-
-
 def relate_pair(lb: GeometryBatch, ga: int, rb: GeometryBatch, gb: int) -> str:
     """DE-9IM string of (lb[ga], rb[gb])."""
     ta, tb = TYPE_DIM[lb.types[ga]], TYPE_DIM[rb.types[gb]]

@@ -522,7 +522,3 @@ def to_wkb(batch: GeometryBatch) -> np.ndarray:
                 chunks.extend(sub)
         out[g] = b"".join(chunks)
     return out
-
-
-def wkb_series(batch: GeometryBatch) -> pd.Series:
-    return pd.Series(to_wkb(batch))

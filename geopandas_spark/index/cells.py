@@ -181,6 +181,31 @@ def cover_res(minx, miny, maxx, maxy, res: int, domain=DOMAIN_UNIT,
     return res_row
 
 
+def canonical_cell(lbb: np.ndarray, rbb: np.ndarray, res: int,
+                   domain=DOMAIN_UNIT, max_cells: int = 4096) -> np.ndarray:
+    """Owner cell of each candidate pair (reference-point rule).
+
+    ``lbb``/``rbb`` are (n, 4) bboxes of the pair's two rows, as covered
+    (dwithin callers pass the padded probe bbox). A pair that shares k
+    cover cells is kept exactly once: in the cell, at the pair's coarser
+    per-row cover res, containing (max(minx), max(miny)) of the two
+    bboxes. That point lies in both bboxes, and each side also emits its
+    ancestor chain down to the other side's min res, so the owner cell is
+    always among the cells the pair was joined on."""
+    rc = np.minimum(
+        cover_res(lbb[:, 0], lbb[:, 1], lbb[:, 2], lbb[:, 3], res, domain,
+                  max_cells),
+        cover_res(rbb[:, 0], rbb[:, 1], rbb[:, 2], rbb[:, 3], res, domain,
+                  max_cells))
+    rx = np.maximum(lbb[:, 0], rbb[:, 0])
+    ry = np.maximum(lbb[:, 1], rbb[:, 1])
+    out = np.empty(len(rc), dtype=np.int64)
+    for r in np.unique(rc):
+        m = rc == r
+        out[m] = point_cell(rx[m], ry[m], int(r), domain)
+    return out
+
+
 def bbox_cover(minx, miny, maxx, maxy, res: int, domain=DOMAIN_UNIT,
                max_cells: int = 4096) -> tuple[np.ndarray, np.ndarray]:
     """Full (non-compact) cover at res of each bbox.

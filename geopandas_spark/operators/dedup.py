@@ -48,22 +48,6 @@ def _str_hash64(s: str) -> int:
     )
 
 
-def _shingle_hashes(text: str, k: int) -> np.ndarray:
-    """Hashes of all k-character shingles (vectorized over the string)."""
-    if text is None:
-        return np.empty(0, dtype=np.uint64)
-    s = text.lower()
-    raw = np.frombuffer(s.encode("utf-8", "replace"), dtype=np.uint8)
-    n = len(raw)
-    if n < k:
-        return np.array([_str_hash64(s) & 0x7FFFFFFFFFFFFFFF], dtype=np.uint64)
-    # polynomial rolling hash over byte windows, fully vectorized
-    base = np.uint64(1099511628211)
-    powers = base ** np.arange(k, dtype=np.uint64)
-    win = np.lib.stride_tricks.sliding_window_view(raw, k).astype(np.uint64)
-    return np.unique((win * powers[None, :]).sum(axis=1))
-
-
 def exact_dedup(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id", normalize: bool = True) -> DataFrame:
     """Keep one representative (min id) per identical text; returns the

@@ -57,20 +57,6 @@ from .sjoin import (BROADCAST_EXPLODED_ROWS, _BUILD_CACHE_MAX,
                     _suffix_columns)
 
 
-def _disk_cells_udf(k: int):
-    """Fixed-radius Chebyshev disk cells of each row's cell."""
-
-    @pandas_udf("array<long>")
-    def _f(cell: pd.Series) -> pd.Series:
-        from ..index import cells as C
-
-        ids = cell.to_numpy(dtype=np.int64)
-        disk = C.grid_disk(ids, k)
-        return pd.Series([np.unique(row).tolist() for row in disk])
-
-    return _f
-
-
 def _cover_disk_udf():
     """array<long> cover cells -> unique disk(1) cells of the whole cover.
 

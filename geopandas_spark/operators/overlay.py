@@ -47,7 +47,8 @@ def _pairs(df1, df2, geom1, geom2, id1, id2, resolution, domain,
     cell equi-join — the big x big path (small build sides route through
     ``_broadcast_probe_intersection`` instead).
 
-    Shuffle-free dedup via the reference-point rule (see sjoin): the SAME
+    Shuffle-free dedup via the reference-point rule
+    (index/cells.canonical_cell): the SAME
     Arrow pass computes the pairwise intersection geometry into
     ``with_intersection`` (empty -> row dropped), so each pair's WKB is
     parsed exactly once."""
@@ -102,17 +103,17 @@ def _broadcast_probe_intersection(probe_raw, rcov, i1: str, i2: str,
     polygons. Here the build side ships once per worker as the CSR cell
     index + WKB (decoded once per worker process via the shared
     ``_BUILD_CACHE``), the probe streams through a single pass computing
-    cover in-kernel, pairs are generated and deduped in-kernel (plain
-    (probe,build) unique — no canonical-cell rule needed), and the
-    pairwise intersection runs only on bbox-overlapping deduped pairs.
+    cover in-kernel, pairs come from sjoin's ``_probe_pairs`` CSR lookup
+    (in-kernel (probe, build) dedup — no canonical-cell rule needed), and
+    the pairwise intersection runs only on bbox-overlapping pairs.
     Wire traffic: O(|probe| + |build|) in, O(|matches|) out.
 
     Emits (__i1, __i2, __g1, __g2, __inter) — the same schema as the
     fused ``_pairs`` path, so residual stages are unchanged.
     """
-    from .sjoin import _collect_build_index, _flat_ancestors, _load_build
+    from .sjoin import _collect_build_index, _load_build, _probe_pairs
 
-    cache_key, bc, nb, rid_vals = _collect_build_index(rcov, i2)
+    cache_key, bc, _, rid_vals, _ = _collect_build_index(rcov, i2)
     i1_t = dict(probe_raw.dtypes)[i1]
     i2_t = dict(rcov.dtypes)[i2]
     probe = probe_raw.select(F.col(i1).alias("__xi1"), "__g1")
@@ -120,11 +121,8 @@ def _broadcast_probe_intersection(probe_raw, rcov, i1: str, i2: str,
     def fn(it):
         from ..geom.clipping import pairwise_intersection
         from ..geom.kernels import bounds as _bounds
-        from ..geom.ragged import _expand_ranges
         from ..geom.wkb import from_wkb, to_wkb
-        from ..index import cells as C
 
-        lb_all = None
         rb_all, rbb, uc, off_, ridx, rwkb = _load_build(cache_key, bc)
         rwkb_arr = np.asarray(rwkb, dtype=object)
         for pdf in it:
@@ -133,37 +131,8 @@ def _broadcast_probe_intersection(probe_raw, rcov, i1: str, i2: str,
             lb = from_wkb(pdf["__g1"])
             lbb = _bounds(lb)
             miss = np.isnan(lbb[:, 0])
-            lbb = np.nan_to_num(lbb)
-            cflat, coff = C.bbox_cover(lbb[:, 0], lbb[:, 1],
-                                       lbb[:, 2], lbb[:, 3],
-                                       resolution, domain=domain)
-            prow = np.repeat(np.arange(len(pdf)), np.diff(coff))
-            if miss.any():
-                keep = ~miss[prow]
-                cflat = cflat[keep]
-                prow = prow[keep]
-            if anc_down_to is not None:
-                cflat, prow = _flat_ancestors(cflat, prow, anc_down_to)
-            if not len(cflat):
-                continue
-            pos = np.minimum(np.searchsorted(uc, cflat), len(uc) - 1)
-            okc = uc[pos] == cflat
-            cnt = np.where(okc, off_[pos + 1] - off_[pos], 0)
-            sel = cnt > 0
-            if not sel.any():
-                continue
-            li = np.repeat(prow[sel], cnt[sel])
-            ri = ridx[_expand_ranges(off_[pos[sel]], off_[pos[sel]] + cnt[sel])]
-            # dedup multi-cell duplicates of the same pair
-            key = li * np.int64(nb) + ri
-            ukey = np.unique(key)
-            li = (ukey // nb).astype(np.int64)
-            ri = (ukey % nb).astype(np.int64)
-            # bbox prefilter: disjoint bboxes cannot intersect
-            pre = ((lbb[li, 0] <= rbb[ri, 2]) & (rbb[ri, 0] <= lbb[li, 2])
-                   & (lbb[li, 1] <= rbb[ri, 3]) & (rbb[ri, 1] <= lbb[li, 3]))
-            li = li[pre]
-            ri = ri[pre]
+            li, ri = _probe_pairs(np.nan_to_num(lbb), miss, rbb, uc, off_,
+                                  ridx, resolution, domain, anc_down_to)
             if not len(li):
                 continue
             res = pairwise_intersection(lb.take(li), rb_all.take(ri))
@@ -187,18 +156,6 @@ def _broadcast_probe_intersection(probe_raw, rcov, i1: str, i2: str,
     return probe.mapInPandas(
         fn, schema=(f"__i1 {i1_t}, __i2 {i2_t}, __g1 binary, "
                     "__g2 binary, __inter binary"))
-
-
-def _intersection_udf():
-    @pandas_udf("binary")
-    def _f(a: pd.Series, b: pd.Series) -> pd.Series:
-        from ..geom import wkb as B
-        from ..geom.clipping import pairwise_intersection
-
-        return pd.Series(list(B.to_wkb(
-            pairwise_intersection(B.from_wkb(a), B.from_wkb(b)))))
-
-    return _f
 
 
 def _intersection_rp_udf(resolution: int, domain):
@@ -228,18 +185,8 @@ def _intersection_rp_udf(resolution: int, domain):
             rb = rb.take(rcod)
         lbb = np.nan_to_num(bounds(lb))
         rbb = np.nan_to_num(bounds(rb))
-        rl = C.cover_res(lbb[:, 0], lbb[:, 1], lbb[:, 2], lbb[:, 3],
-                         resolution, domain=domain)
-        rr = C.cover_res(rbb[:, 0], rbb[:, 1], rbb[:, 2], rbb[:, 3],
-                         resolution, domain=domain)
-        rc = np.minimum(rl, rr)
-        rx = np.maximum(lbb[:, 0], rbb[:, 0])
-        ry = np.maximum(lbb[:, 1], rbb[:, 1])
-        canon = np.empty(len(rc), dtype=np.int64)
-        for r in np.unique(rc):
-            m = rc == r
-            canon[m] = C.point_cell(rx[m], ry[m], int(r), domain)
-        keep = canon == cell.to_numpy(dtype=np.int64)
+        keep = C.canonical_cell(lbb, rbb, resolution,
+                                domain) == cell.to_numpy(dtype=np.int64)
         # bbox-overlap prefilter: disjoint bboxes cannot intersect
         keep &= (
             (lbb[:, 0] <= rbb[:, 2]) & (rbb[:, 0] <= lbb[:, 2])
@@ -281,7 +228,6 @@ def _difference_vs_union_udf():
             if general:
                 # arbitrary polygons: Martinez-Rueda difference vs each
                 # intersecting neighbor in turn
-                from .sjoin import _ancestors_udf  # noqa: F401 (no-op import guard)
                 from ..geom.boolean import boolean_rings, group_rings
                 from ..geom.clipping import _all_poly_rings
 
@@ -438,9 +384,10 @@ def overlay(
     dense workload whose logical pairs are keyed otherwise pays the
     full cross-key candidate cost only to discard it (measured 137x
     candidate inflation on the dart gate query). pair_on always rides
-    the shuffle plan — with a key the equi-join is the efficient
-    physical strategy, and the broadcast kernel's in-kernel pair
-    generation has no attribute channel."""
+    the shuffle plan: the equi-join on (cell, pair_on) never generates
+    a cross-key candidate, while a broadcast probe would generate every
+    cell-sharing pair first and drop the cross-key ones after — paying
+    exactly the inflation pair_on exists to avoid."""
     if how not in VALID_HOW:
         raise ValueError(f"`how` was {how!r} but is expected to be in {VALID_HOW}")
     if pair_on is not None and (pair_on not in df1.columns

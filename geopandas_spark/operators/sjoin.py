@@ -11,12 +11,19 @@ Physical plan (SURVEY.md §2.4 / §4), designed for 1000-executor scale:
 1. **Cover**: each side computes bbox -> quadtree cell cover at a shared
    resolution (adaptive if not given) — one Arrow-UDF projection, no
    shuffle.
-2. **Coarse join**: explode cells, hash equi-join on (cell [, salt]
-   [, on_attribute...]). The small side is broadcast when below threshold;
-   otherwise a shuffle join with AQE skew splitting plus *explicit salting*
-   of hot cells (north rule: explicit skew handling — ocean/megacity cells
-   are replicated on the build side, probe rows hash into salt buckets).
-3. **Dedupe**: a pair can share several cells -> dropDuplicates on ids.
+2. **Candidates**: one of two passes. A small build side ships once as
+   a broadcast cell->row CSR index and each probe batch looks up its
+   in-kernel cover (broadcast probe). Otherwise both sides are exploded
+   to (cell, salt) rows, union-tagged and cogrouped by (cell, salt),
+   with *explicit salting* of hot cells (north rule: explicit skew
+   handling — ocean/megacity cells are replicated on the build side,
+   probe rows hash into salt buckets). ``on_attribute`` columns ride
+   along as an attribute channel; candidate pairs whose attributes
+   differ are dropped before the exact predicate.
+3. **Dedupe**: a pair can share several cells. The broadcast probe
+   dedups (probe, build) row pairs in-kernel; the cogroup pass keeps a
+   pair only in its owner cell (index/cells.canonical_cell). Neither
+   needs a shuffle.
 4. **Refine**: exact predicate via the vectorized numpy kernels
    (geom/predicates.py) — the distributed analogue of the reference's
    prepared-geometry refinement (sindex.py:86-87).
@@ -45,13 +52,6 @@ VALID_PRED = (
     "intersects", "contains", "contains_properly", "within", "covers",
     "covered_by", "touches", "crosses", "overlaps", "dwithin", "equals",
 )
-
-
-def _check_crs_like(left_geom: str, right_geom: str) -> None:
-    # CRS metadata travels at the table level in this engine; equality is
-    # asserted by callers that attach it (sources/geoparquet.py). The
-    # reference warns on mismatch (array.py:38-63).
-    return None
 
 
 def _suffix_columns(left: DataFrame, right: DataFrame, lsuffix: str,
@@ -90,7 +90,6 @@ def _bbox_stats(left: DataFrame, right: DataFrame) -> list[dict]:
 # exploded build-side rows below this -> broadcast the exploded cell cover
 # instead of shuffling both sides (UDF-derived sizes defeat AQE's own
 # auto-broadcast estimation, so the operators decide from the stats job)
-BROADCAST_ROWS = 100_000
 BROADCAST_EXPLODED_ROWS = 2_000_000
 
 
@@ -170,66 +169,6 @@ def _ancestors_udf(down_to: int):
     return _f
 
 
-def _refine_rp_udf(pred: str, resolution: int, domain, distance, lpad: float):
-    """Exact predicate AND reference-point dedup in one Arrow pass.
-
-    A candidate pair that shares k cover cells is evaluated k times but
-    kept exactly once: in the canonical cell — the cell (at the pair's
-    coarser per-row cover res) containing (max(minx), max(miny)) of the
-    two bboxes. Replaces a dropDuplicates shuffle with pure map-side math;
-    the canonical cell is always among the joined cells because it lies in
-    both bboxes and both sides emit ancestors down to the other's min res.
-
-    Bounds arrive as columns carried through the cell join (computed once
-    in _prep_side) — round 1 recomputed them from a second decode here.
-    """
-
-    @pandas_udf("boolean")
-    def _f(lg: pd.Series, rg: pd.Series, cell: pd.Series,
-           lmnx: pd.Series, lmny: pd.Series, lmxx: pd.Series, lmxy: pd.Series,
-           rmnx: pd.Series, rmny: pd.Series, rmxx: pd.Series, rmxy: pd.Series,
-           ) -> pd.Series:
-        from ..geom.predicates import pairwise_predicate
-        from ..geom.wkb import from_wkb
-        from ..index import cells as C
-
-        # candidate batches repeat the same build-side geometry many
-        # times (every probe row joined to a rect repeats the rect WKB):
-        # decode UNIQUES once and gather — WKB parse is the hot cost
-        lcod, luniq = pd.factorize(lg, use_na_sentinel=False)
-        rcod, runiq = pd.factorize(rg, use_na_sentinel=False)
-        lb = from_wkb(pd.Series(luniq))
-        rb = from_wkb(pd.Series(runiq))
-        # all-unique columns factorize to identity codes -> skip the gather
-        if len(luniq) != len(lg):
-            lb = lb.take(lcod)
-        if len(runiq) != len(rg):
-            rb = rb.take(rcod)
-        ok = pairwise_predicate(pred, lb, rb, distance)
-        lbb = np.nan_to_num(np.column_stack([
-            lmnx.to_numpy(np.float64), lmny.to_numpy(np.float64),
-            lmxx.to_numpy(np.float64), lmxy.to_numpy(np.float64)]))
-        rbb = np.nan_to_num(np.column_stack([
-            rmnx.to_numpy(np.float64), rmny.to_numpy(np.float64),
-            rmxx.to_numpy(np.float64), rmxy.to_numpy(np.float64)]))
-        if lpad:
-            lbb = lbb + np.array([-lpad, -lpad, lpad, lpad])
-        rl = C.cover_res(lbb[:, 0], lbb[:, 1], lbb[:, 2], lbb[:, 3],
-                         resolution, domain=domain)
-        rr = C.cover_res(rbb[:, 0], rbb[:, 1], rbb[:, 2], rbb[:, 3],
-                         resolution, domain=domain)
-        rc = np.minimum(rl, rr)
-        rx = np.maximum(lbb[:, 0], rbb[:, 0])
-        ry = np.maximum(lbb[:, 1], rbb[:, 1])
-        canon = np.empty(len(rc), dtype=np.int64)
-        for r in np.unique(rc):
-            m = rc == r
-            canon[m] = C.point_cell(rx[m], ry[m], int(r), domain)
-        return pd.Series(ok & (canon == cell.to_numpy(dtype=np.int64)))
-
-    return _f
-
-
 def _widen(df: DataFrame) -> DataFrame:
     from ..conf import widen
 
@@ -267,19 +206,66 @@ def _flat_ancestors(cflat: np.ndarray, prow: np.ndarray, down_to: int):
     return np.concatenate(outs_c), np.concatenate(outs_p)
 
 
-def _collect_build_index(rcov, rid: str):
-    """Arrow-collect a (rid, __rgeom, __cells) build side into a broadcast
-    cell->row CSR index (+ raw WKB). Shared by the sjoin broadcast probe
-    and overlay's broadcast intersection probe. Returns
-    (cache_key, broadcast, n_build_rows, rid_values)."""
+def _attr_channel(left: DataFrame, right: DataFrame,
+                  on_attribute: list[str]):
+    """``on_attribute`` columns as the passes' attribute channel
+    ``__a0, __a1, ...``, cast to the type a union of the two sides
+    resolves, so both passes compare the same values. Timestamps travel
+    as epoch micros and nested values as JSON, so the passes compare
+    plain numpy values whatever route the rows took into Python."""
+    if not on_attribute:
+        return []
+    common = left.select(on_attribute).unionByName(
+        right.select(on_attribute)).schema
+    out = []
+    for k, f in enumerate(common.fields):
+        col = F.col(f.name).cast(f.dataType)
+        t = f.dataType.simpleString()
+        if t.startswith("timestamp"):
+            col = F.unix_micros(col.cast("timestamp"))
+        elif t.startswith(("array", "struct")):
+            col = F.to_json(col)
+        out.append(col.alias(f"__a{k}"))
+    return out
+
+
+def _drop_null_attrs(df: DataFrame, attrs: list[str]) -> DataFrame:
+    """Spark join-key rule: a null attribute never matches. The rows
+    leave before the pass; the id-keyed assembly re-pads them for outer
+    joins."""
+    for c in attrs:
+        df = df.filter(F.col(c).isNotNull())
+    return df
+
+
+def _attrs_equal(lvals: list, rvals: list, li: np.ndarray,
+                 ri: np.ndarray) -> np.ndarray:
+    """Mask of candidate pairs (li, ri) whose attribute-channel values
+    are equal in every column; NaN equals NaN, as in a Spark join key."""
+    keep = np.ones(len(li), dtype=bool)
+    for a, b in zip(lvals, rvals):
+        x, y = a[li], b[ri]
+        eq = x == y
+        if x.dtype.kind == "f":
+            eq |= np.isnan(x) & np.isnan(y)
+        keep &= eq
+    return keep
+
+
+def _collect_build_index(rcov, rid: str, attrs: list[str] = ()):
+    """Arrow-collect a (rid, __rgeom, __cells[, attrs]) build side into a
+    broadcast cell->row CSR index (+ raw WKB). Shared by the sjoin
+    broadcast probe and overlay's broadcast intersection probe. Returns
+    (cache_key, broadcast, n_build_rows, rid_values, attr_values)."""
     import uuid
 
     spark = rcov.sparkSession
     tbl = (rcov.select(F.col(rid).alias("i"), F.col("__rgeom").alias("g"),
-                       F.col("__cells").alias("c"))
+                       F.col("__cells").alias("c"), *attrs)
            .toArrow().combine_chunks())
     nb = tbl.num_rows
     rid_vals = np.asarray(tbl["i"].to_pandas(), dtype=object)
+    rattr = [tbl[a].to_pandas().to_numpy() for a in attrs]
     rwkb: list = tbl["g"].to_pylist()
     ccol = tbl["c"].combine_chunks()
     flat = ccol.values.to_numpy(zero_copy_only=False).astype(np.int64,
@@ -309,7 +295,7 @@ def _collect_build_index(rcov, rid: str):
     cache_key = uuid.uuid4().hex
     bc = spark.sparkContext.broadcast(
         {"wkb": rwkb, "ucells": ucells, "off": off, "ridx": fi})
-    return cache_key, bc, nb, rid_vals
+    return cache_key, bc, nb, rid_vals, rattr
 
 
 def _load_build(cache_key: str, bc):
@@ -331,10 +317,60 @@ def _load_build(cache_key: str, bc):
     return got
 
 
+def _probe_pairs(lbb: np.ndarray, miss: np.ndarray, rbb: np.ndarray,
+                 uc: np.ndarray, off_: np.ndarray, ridx: np.ndarray,
+                 resolution: int, domain, anc_down_to: int | None):
+    """Candidate (probe row, build row) pairs of one probe batch against
+    a broadcast CSR build index — the lookup shared by the sjoin and
+    overlay broadcast passes.
+
+    ``lbb`` are the probe bboxes as covered (already dwithin-padded);
+    ``miss`` rows (empty geometry) produce no pairs; ``uc`` must be
+    non-empty. In-kernel cover, ancestor chain down to ``anc_down_to``,
+    CSR expansion, then pair dedup and a bbox prefilter (every predicate
+    the passes evaluate is false on bbox-disjoint pairs). Returns (li, ri)
+    int64 arrays."""
+    from ..geom.ragged import _expand_ranges
+    from ..index import cells as C
+
+    # flat (cell, row) pairs straight from the bounds — no object lists,
+    # no per-row Python
+    cflat, coff = C.bbox_cover(lbb[:, 0], lbb[:, 1], lbb[:, 2], lbb[:, 3],
+                               resolution, domain=domain)
+    ncell = np.diff(coff)
+    prow = np.repeat(np.arange(len(lbb)), ncell)
+    if miss.any():
+        keep = ~miss[prow]
+        cflat = cflat[keep]
+        prow = prow[keep]
+    multi = bool((ncell > 1).any())
+    if anc_down_to is not None:
+        n0 = len(cflat)
+        cflat, prow = _flat_ancestors(cflat, prow, anc_down_to)
+        multi = multi or len(cflat) > n0
+    if not len(cflat):
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    pos = np.minimum(np.searchsorted(uc, cflat), len(uc) - 1)
+    cnt = np.where(uc[pos] == cflat, off_[pos + 1] - off_[pos], 0)
+    sel = cnt > 0
+    li = np.repeat(prow[sel], cnt[sel])
+    ri = ridx[_expand_ranges(off_[pos[sel]], off_[pos[sel]] + cnt[sel])]
+    # a probe row spanning several cells can meet the same build row in
+    # more than one of them: dedup on the (probe, build) key
+    if multi:
+        nb = np.int64(len(rbb))
+        ukey = np.unique(li * nb + ri)
+        li = (ukey // nb).astype(np.int64)
+        ri = (ukey % nb).astype(np.int64)
+    pre = ((lbb[li, 0] <= rbb[ri, 2]) & (rbb[ri, 0] <= lbb[li, 2])
+           & (lbb[li, 1] <= rbb[ri, 3]) & (rbb[ri, 1] <= lbb[li, 3]))
+    return li[pre], ri[pre]
+
+
 def _broadcast_probe_refined(lraw, rcov, lid: str, rid: str, predicate: str,
                              distance, lpad: float, resolution: int, domain,
                              anc_down_to: int | None,
-                             emit_geom: bool = False):
+                             emit_geom: bool = False, attrs: list[str] = ()):
     """Broadcast spatial join as a single probe-side ``mapInPandas`` pass.
 
     Round-2 scale fix: the round-1 plan materialized every candidate
@@ -346,16 +382,15 @@ def _broadcast_probe_refined(lraw, rcov, lid: str, rid: str, predicate: str,
     row CSR index + WKB list, decoded ONCE per worker process, and the
     probe side streams through a single Arrow pass with NO join, NO
     explode and NO pair materialization: candidates are generated
-    in-kernel from the CSR, deduped per probe row, and refined against
-    the cached decoded build batch.  Wire traffic is O(|probe| +
-    |build|) + O(|matches|) id pairs out.
+    in-kernel from the CSR (``_probe_pairs``), and refined against the
+    cached decoded build batch.  Wire traffic is O(|probe| + |build|) +
+    O(|matches|) id pairs out.
 
-    ``lraw`` carries ONLY (lid, __lgeom): bounds, cell cover and the
-    ancestor chain are computed in-kernel from the decoded geometry
-    (vectorized bbox_cover over flat offsets), so the probe side pays a
-    single Arrow stage — the earlier plan ran st_bounds +
-    st_cells_from_bbox + a per-row-Python _ancestors_udf upstream and
-    shipped the cell arrays through Arrow.
+    ``lraw`` carries ONLY (lid, __lgeom[, attrs]): bounds, cell cover and
+    the ancestor chain are computed in-kernel from the decoded geometry,
+    so the probe side pays a single Arrow stage. ``attrs`` name the
+    attribute-channel columns of both ``lraw`` and ``rcov``; candidate
+    pairs whose values differ are dropped before the predicate.
 
     Returns a DataFrame (__xlid, __xrid[, __lgeom]) of matched pairs —
     ``emit_geom`` rides the probe WKB along only when the caller will
@@ -369,19 +404,19 @@ def _broadcast_probe_refined(lraw, rcov, lid: str, rid: str, predicate: str,
     # local[2] 59 s outside the parallel fraction). toArrow() lands the
     # cell lists as one flat int64 buffer + offsets, so the cell->row
     # index is pure numpy.
-    cache_key, bc, nb, rid_vals = _collect_build_index(rcov, rid)
+    cache_key, bc, _, rid_vals, rattr = _collect_build_index(rcov, rid,
+                                                             attrs)
 
     lid_t = dict(lraw.dtypes)[lid]
     rid_t = dict(rcov.dtypes)[rid]
-    probe = lraw.select(F.col(lid).alias("__xlid"), "__lgeom")
+    probe = lraw.select(F.col(lid).alias("__xlid"), "__lgeom", *attrs)
     pad = float(lpad or 0.0)
 
     def fn(it):
         from ..geom.kernels import bounds as _bounds
         from ..geom.predicates import pairwise_predicate
-        from ..geom.ragged import _expand_ranges
         from ..geom.wkb import from_wkb
-        from ..index import cells as C
+        from ._cellstream import BUFFER_ROWS as _CAP
 
         rb_all, rbb, uc, off_, ridx, _ = _load_build(cache_key, bc)
         for pdf in it:
@@ -393,61 +428,22 @@ def _broadcast_probe_refined(lraw, rcov, lid: str, rid: str, predicate: str,
             lbb = np.nan_to_num(lbb)
             if pad:
                 lbb = lbb + np.array([-pad, -pad, pad, pad])
-            # in-kernel cover: flat (cell, row) pairs straight from the
-            # padded bounds — no object lists, no per-row Python
-            cflat, coff = C.bbox_cover(lbb[:, 0], lbb[:, 1],
-                                       lbb[:, 2], lbb[:, 3],
-                                       resolution, domain=domain)
-            ncell = np.diff(coff)
-            prow = np.repeat(np.arange(len(pdf)), ncell)
-            if miss.any():
-                keep = ~miss[prow]
-                cflat = cflat[keep]
-                prow = prow[keep]
-            multi = bool((ncell > 1).any())
-            if anc_down_to is not None:
-                n0 = len(cflat)
-                cflat, prow = _flat_ancestors(cflat, prow, anc_down_to)
-                multi = multi or len(cflat) > n0
-            if not len(cflat):
+            li, ri = _probe_pairs(lbb, miss, rbb, uc, off_, ridx,
+                                  resolution, domain, anc_down_to)
+            if attrs:
+                ok = _attrs_equal([pdf[a].to_numpy() for a in attrs],
+                                  rattr, li, ri)
+                li, ri = li[ok], ri[ok]
+            if not len(li):
                 continue
-            pos = np.minimum(np.searchsorted(uc, cflat), len(uc) - 1)
-            okc = uc[pos] == cflat
-            cnt = np.where(okc, off_[pos + 1] - off_[pos], 0)
-            sel = cnt > 0
-            if not sel.any():
-                continue
-            li = np.repeat(prow[sel], cnt[sel])
-            ri = ridx[_expand_ranges(off_[pos[sel]], off_[pos[sel]] + cnt[sel])]
-            # multi-cell probes can produce the same pair via several
-            # cells: dedup on the (probe, build) key (in-kernel — the
-            # round-1 plan needed a canonical-cell rule for this)
-            if multi:
-                key = li * np.int64(nb) + ri
-                ukey = np.unique(key)
-                li = (ukey // nb).astype(np.int64)
-                ri = (ukey % nb).astype(np.int64)
             lids = pdf["__xlid"].to_numpy()
             lws = pdf["__lgeom"].to_numpy(dtype=object) if emit_geom else None
             o_lid = []
             o_rid = []
             o_lw = []
-            from ._cellstream import BUFFER_ROWS as _CAP
-
             for lo in range(0, len(li), _CAP):
                 ls = li[lo:lo + _CAP]
                 rs = ri[lo:lo + _CAP]
-                # bbox prefilter (lbb already dwithin-padded): prunes
-                # exact predicate work; any predicate in VALID_PRED is
-                # false on bbox-disjoint (beyond pad) pairs
-                pre = ((lbb[ls, 0] <= rbb[rs, 2])
-                       & (rbb[rs, 0] <= lbb[ls, 2])
-                       & (lbb[ls, 1] <= rbb[rs, 3])
-                       & (rbb[rs, 1] <= lbb[ls, 3]))
-                ls = ls[pre]
-                rs = rs[pre]
-                if not len(ls):
-                    continue
                 ok = pairwise_predicate(predicate, lb.take(ls),
                                         rb_all.take(rs), distance)
                 ls = ls[ok]
@@ -474,7 +470,8 @@ def _broadcast_probe_refined(lraw, rcov, lid: str, rid: str, predicate: str,
 def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
                      distance, lpad: float, resolution: int, domain,
                      salt_hot_cells: bool, hot_cell_threshold: int,
-                     salt_factor: int, emit_geom: bool = False):
+                     salt_factor: int, emit_geom: bool = False,
+                     attrs: list[str] = ()):
     """Shuffle spatial join as a union-cogroup-by-cell streaming pass.
 
     Round-2 scale fix for the big×big path: instead of a hash join whose
@@ -482,22 +479,23 @@ def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
     (O(pairs) shuffle+Arrow payload), both sides are union-tagged and
     hash-partitioned by (cell, salt) — each geometry crosses the wire
     once per cover cell, pairs are generated in-kernel per cell group,
-    deduped by the canonical-cell rule, refined, and leave the pass as
-    id pairs.  Explicit hot-cell salting (north rule): build rows of hot
-    cells are replicated into ``salt_factor`` buckets, probe rows hash
-    into one bucket; the kernel groups on (cell, salt) so each pair is
-    still generated exactly once.
+    deduped by the canonical-cell rule, filtered on the ``attrs``
+    attribute channel the union-tagged rows carry, refined, and leave the
+    pass as id pairs.  Explicit hot-cell salting (north rule): build rows
+    of hot cells are replicated into ``salt_factor`` buckets, probe rows
+    hash into one bucket; the kernel groups on (cell, salt) so each pair
+    is still generated exactly once.
 
     Returns a DataFrame (__xlid, __xrid, __lgeom) of matched pairs.
     """
     spark = lcov.sparkSession
     lx = lcov.select(F.col(lid).alias("__lid"),
                      F.col("__lgeom").alias("__geom"),
-                     F.explode("__cells").alias("__cell"),
+                     F.explode("__cells").alias("__cell"), *attrs,
                      ).withColumn("__side", F.lit(1))
     rx = rcov.select(F.col(rid).alias("__rid"),
                      F.col("__rgeom").alias("__geom"),
-                     F.explode("__cells").alias("__cell"),
+                     F.explode("__cells").alias("__cell"), *attrs,
                      ).withColumn("__side", F.lit(0))
     salted = False
     if salt_hot_cells:
@@ -575,10 +573,8 @@ def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
         rbb = np.nan_to_num(_bounds(rb))
         if pad:
             lbb = lbb + np.array([-pad, -pad, pad, pad])
-        lres = C.cover_res(lbb[:, 0], lbb[:, 1], lbb[:, 2], lbb[:, 3],
-                           resolution, domain=domain)
-        rres = C.cover_res(rbb[:, 0], rbb[:, 1], rbb[:, 2], rbb[:, 3],
-                           resolution, domain=domain)
+        lattr = [pdf[a].to_numpy()[lsub] for a in attrs]
+        rattr = [pdf[a].to_numpy()[rsub] for a in attrs]
         lid_arr = pdf["__lid"].to_numpy()[lsub]
         rid_arr = pdf["__rid"].to_numpy()[rsub]
         lcell = cell[lsub]
@@ -609,18 +605,11 @@ def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
             ri = ri[pre]
             if not len(li):
                 continue
-            # canonical-cell dedup: a pair sharing k cover cells is kept
-            # only in the cell (at the pair's coarser per-row cover res)
-            # containing (max(minx), max(miny)) of the two bboxes —
-            # exactly the _refine_rp_udf rule, computed in-kernel
-            rc = np.minimum(lres[li], rres[ri])
-            rxm = np.maximum(lbb[li, 0], rbb[ri, 0])
-            rym = np.maximum(lbb[li, 1], rbb[ri, 1])
-            canon = np.empty(len(rc), dtype=np.int64)
-            for r in np.unique(rc):
-                m = rc == r
-                canon[m] = C.point_cell(rxm[m], rym[m], int(r), domain)
-            keep = canon == lcell[li]
+            # a pair sharing k cover cells is kept only in its owner cell
+            keep = C.canonical_cell(lbb[li], rbb[ri], resolution,
+                                    domain) == lcell[li]
+            if attrs:
+                keep &= _attrs_equal(lattr, rattr, li, ri)
             li = li[keep]
             ri = ri[keep]
             if not len(li):
@@ -772,10 +761,14 @@ def sjoin(
             c = _padded("__bb.minx", "__bb.miny", "__bb.maxx", "__bb.maxy")
         return df.withColumn("__cells", c)
 
-    lcov = cover(left.select(lid, F.col(left_geom).alias("__lgeom"), "__bb",
-                             *on_attribute), "__lgeom", pad)
-    rcov = cover(right.select(rid, F.col(right_geom).alias("__rgeom"), "__bb", *on_attribute),
-                 "__rgeom", 0.0)
+    attrs = [f"__a{k}" for k in range(len(on_attribute))]
+    chan = _attr_channel(left, right, on_attribute)
+    lcov = cover(_drop_null_attrs(left.select(
+        lid, F.col(left_geom).alias("__lgeom"), "__bb", *chan), attrs),
+        "__lgeom", pad)
+    rcov = cover(_drop_null_attrs(right.select(
+        rid, F.col(right_geom).alias("__rgeom"), "__bb", *chan), attrs),
+        "__rgeom", 0.0)
     if rmin < resolution:  # right may have coarse rows -> left emits chain
         lcov = lcov.withColumn("__cells", _ancestors_udf(rmin)(F.col("__cells")))
     if lmin < resolution:
@@ -809,36 +802,30 @@ def sjoin(
     # it twice against the base tables). Only THEN do the kernels emit
     # the probe WKB per match; every other shape re-joins by id, where
     # per-match WKB through Arrow is pure serialization waste.
-    narrow = (how == "inner" and not on_attribute
+    narrow = (how == "inner"
               and set(ldata) <= {lid, left_geom}
               and set(rdata) <= {rid})
     emit_geom = narrow and left_geom in ldata
 
-    if not on_attribute and broadcast_right and not salt_hot_cells:
+    if broadcast_right and not salt_hot_cells:
         # small build side: single probe-side pass, no join, no explode
         # (an explicit salting request signals a shuffle-scale build side
         # — it always routes to the cogroup pass). The probe ships ONLY
-        # (id, wkb); bounds/cover/ancestors happen in-kernel.
-        lraw = left.select(lid, F.col(left_geom).alias("__lgeom"))
+        # (id, wkb[, attrs]); bounds/cover/ancestors happen in-kernel.
+        lraw = _drop_null_attrs(left.select(
+            lid, F.col(left_geom).alias("__lgeom"), *chan), attrs)
         refined = _broadcast_probe_refined(
             lraw, rcov, lid, rid, predicate, distance, pad, resolution,
             domain, rmin if rmin < resolution else None,
-            emit_geom=emit_geom)
-    elif not on_attribute:
+            emit_geom=emit_geom, attrs=attrs)
+    else:
         # big×big: union-cogroup by cell — geometry crosses the wire once
         # per cover cell, pairs leave as ids
         refined = _cogroup_refined(lcov, rcov, lid, rid, predicate,
                                    distance, pad, resolution, domain,
                                    salt_hot_cells, hot_cell_threshold,
-                                   salt_factor, emit_geom=emit_geom)
-    else:
-        refined = _join_refine_path(
-            lcov, rcov, lid, rid, on_attribute, predicate, distance, pad,
-            resolution, domain, broadcast_right, salt_hot_cells,
-            hot_cell_threshold, salt_factor)
-        if narrow:
-            narrow = False  # legacy path emits no geometry column
-            emit_geom = False
+                                   salt_factor, emit_geom=emit_geom,
+                                   attrs=attrs)
     matched = refined.select("__xlid", "__xrid")
 
     if narrow:
@@ -885,65 +872,3 @@ def sjoin(
             .withColumn("index_left", F.col("__LID"))
         )
     return joined.drop("__LID", "__RID")
-
-
-def _join_refine_path(lcov, rcov, lid, rid, on_attribute, predicate,
-                      distance, pad, resolution, domain, broadcast_right,
-                      salt_hot_cells, hot_cell_threshold, salt_factor):
-    """Legacy coarse-join + per-pair-refine plan, kept for the
-    ``on_attribute`` conjunct (the cogroup/broadcast passes group on
-    cell only).  Returns (__xlid, __xrid, __lgeom, ...) matched pairs."""
-    lx = lcov.select(F.col(lid).alias("__xlid"), "__lgeom",
-                     F.col("__bb").alias("__lbb"), *on_attribute,
-                     F.explode("__cells").alias("__cell"))
-    rx = rcov.select(F.col(rid).alias("__xrid"), "__rgeom",
-                     F.col("__bb").alias("__rbb"),
-                     *[F.col(c).alias(f"__r_{c}") for c in on_attribute],
-                     F.explode("__cells").alias("__cell"))
-
-    join_keys = [lx["__cell"] == rx["__cell"]] + [
-        lx[c] == rx[f"__r_{c}"] for c in on_attribute
-    ]
-
-    if salt_hot_cells:
-        hot = (
-            rx.groupBy("__cell").count()
-            .filter(F.col("count") >= hot_cell_threshold)
-            .select(F.col("__cell").alias("__hot_cell"))
-        )
-        hot_list = [r["__hot_cell"] for r in hot.collect()]
-        if hot_list:
-            S = int(salt_factor)
-            lx = lx.withColumn(
-                "__salt",
-                F.when(F.col("__cell").isin(hot_list),
-                       F.pmod(F.xxhash64(F.col("__xlid")), F.lit(S)))
-                .otherwise(F.lit(0)),
-            )
-            rx = rx.withColumn(
-                "__salt_arr",
-                F.when(F.col("__cell").isin(hot_list),
-                       F.sequence(F.lit(0), F.lit(S - 1)))
-                .otherwise(F.array(F.lit(0))),
-            ).withColumn("__salt", F.explode("__salt_arr")).drop("__salt_arr")
-            join_keys.append(lx["__salt"] == rx["__salt"].cast("long"))
-
-    rj = F.broadcast(rx) if broadcast_right else rx
-
-    # Refine runs map-side in the same stage as the coarse join; the only
-    # shuffled payload afterwards is (lid, rid) id pairs. Duplicate
-    # candidate pairs (a pair can share several cells) are eliminated
-    # WITHOUT a shuffle by the reference-point rule: the pair only counts
-    # in the canonical cell containing the top-left corner of its bbox
-    # intersection, at the pair's coarser cover res.
-    cand = lx.join(rj, on=join_keys, how="inner").select(
-        lx["__xlid"], rx["__xrid"], lx["__lgeom"], rx["__rgeom"],
-        lx["__cell"].alias("__jcell"), lx["__lbb"], rx["__rbb"],
-    )
-    return cand.filter(
-        _refine_rp_udf(predicate, resolution, domain, distance, pad)(
-            F.col("__lgeom"), F.col("__rgeom"), F.col("__jcell"),
-            F.col("__lbb.minx"), F.col("__lbb.miny"),
-            F.col("__lbb.maxx"), F.col("__lbb.maxy"),
-            F.col("__rbb.minx"), F.col("__rbb.miny"),
-            F.col("__rbb.maxx"), F.col("__rbb.maxy")))

@@ -1,8 +1,8 @@
 """Stream-static spatial join (Structured Streaming).
 
 The reference (GeoPandas) is batch-only, but the engine's spatial-join
-machinery (sjoin.py:224, cells.py:184) is stateless per row-pair, so it
-maps directly onto a Spark stream-static inner join:
+machinery (operators/sjoin.py, index/cells.py) is stateless per
+row-pair, so it maps directly onto a Spark stream-static inner join:
 
     stream side (unbounded)  — cell cover, narrow per-microbatch
     static side (dimension)  — cell cover computed ONCE, cached, and
@@ -26,9 +26,10 @@ coarsens any row whose cover would exceed max_cells, so
 * the stream side emits ancestors down to the static side's minimum
   possible cover res (a one-off stats pass over the bounded static
   side) — a coarsened STATIC row still meets fine stream rows,
-* the refine recomputes each pair's canonical resolution from both
-  bboxes (operators/sjoin.py's _refine_rp_udf rule), so the multi-level
-  matches collapse to exactly one surviving cell per true pair.
+* the refine recomputes each pair's owner cell from both bboxes
+  (index/cells.canonical_cell, the rule batch sjoin's cogroup pass and
+  overlay use), so the multi-level matches collapse to exactly one
+  surviving cell per true pair.
 
 At 100 TB/day this is the shape you want: the static side is a bounded
 dimension (boundaries, geofences) whose exploded cover fits in executor
@@ -59,10 +60,9 @@ def _refine_keep(predicate: str, resolution: int, domain,
                  max_cells: int = 4096) -> Column:
     """Pairwise predicate + canonical-cell ownership, one Arrow pass.
 
-    Ownership is evaluated at the pair's coarser per-row cover res
-    (recomputed from both bboxes with the same max_cells fallback the
-    cover used), so pairs that joined at several resolutions via the
-    ancestor chains survive in exactly one cell."""
+    Ownership (index/cells.canonical_cell) is evaluated with the same
+    max_cells fallback the cover used, so pairs that joined at several
+    resolutions via the ancestor chains survive in exactly one cell."""
 
     @pandas_udf("boolean")
     def _f(lg: pd.Series, rg: pd.Series, cell: pd.Series) -> pd.Series:
@@ -73,8 +73,7 @@ def _refine_keep(predicate: str, resolution: int, domain,
 
         # candidate batches repeat the few static geometries' WKB for
         # every stream row in their cells: decode UNIQUES once and
-        # gather — WKB parse is the hot cost (same pattern as the batch
-        # refine, operators/sjoin.py; round-4 review fix)
+        # gather — WKB parse is the hot cost (round-4 review fix)
         lcod, luniq = pd.factorize(lg, use_na_sentinel=False)
         rcod, runiq = pd.factorize(rg, use_na_sentinel=False)
         lb = from_wkb(pd.Series(luniq))
@@ -84,19 +83,9 @@ def _refine_keep(predicate: str, resolution: int, domain,
         if len(runiq) != len(rg):
             rb = rb.take(rcod)
         ok = np.asarray(pairwise_predicate(predicate, lb, rb), dtype=bool)
-        lbb = np.nan_to_num(bounds(lb))
-        rbb = np.nan_to_num(bounds(rb))
-        rl = C.cover_res(lbb[:, 0], lbb[:, 1], lbb[:, 2], lbb[:, 3],
-                         resolution, domain=domain, max_cells=max_cells)
-        rr = C.cover_res(rbb[:, 0], rbb[:, 1], rbb[:, 2], rbb[:, 3],
-                         resolution, domain=domain, max_cells=max_cells)
-        rc = np.minimum(rl, rr)
-        rpx = np.maximum(lbb[:, 0], rbb[:, 0])
-        rpy = np.maximum(lbb[:, 1], rbb[:, 1])
-        own = np.empty(len(rc), dtype=np.int64)
-        for r in np.unique(rc):
-            m = rc == r
-            own[m] = C.point_cell(rpx[m], rpy[m], int(r), domain=domain)
+        own = C.canonical_cell(np.nan_to_num(bounds(lb)),
+                               np.nan_to_num(bounds(rb)), resolution,
+                               domain, max_cells)
         return pd.Series(ok & (own == cell.to_numpy(dtype=np.int64)))
 
     return _f

@@ -95,3 +95,47 @@ def test_pick_resolution():
     assert C.pick_resolution(1 / 16, 1 / 16) == 4
     assert C.pick_resolution(1.0, 1.0) == 0
     assert C.pick_resolution(1e-30, 1e-30) == C.MAX_RES
+
+
+def test_canonical_cell_is_a_shared_join_cell():
+    """The owner cell of an overlapping bbox pair lies in BOTH sides'
+    cover plus ancestor chain down to the other side's cover res — the
+    cells the pair is joined on — so keeping each pair only in its owner
+    cell drops duplicates without losing any pair."""
+    rng = np.random.default_rng(11)
+    res, max_cells, n = 8, 64, 400
+    # a shared point per pair guarantees overlap; a quarter of the bboxes
+    # are giant (their cover falls back below res)
+    px, py = rng.random(n), rng.random(n)
+
+    def around(giant):
+        w = np.where(giant, rng.uniform(0.2, 0.9, (2, n)),
+                     rng.uniform(0.0, 0.02, (2, n)))
+        f = rng.random((2, n))
+        return np.clip(np.column_stack([px - w[0] * f[0], py - w[1] * f[1],
+                                        px + w[0] * (1 - f[0]),
+                                        py + w[1] * (1 - f[1])]), 0.0, 1.0)
+
+    lbb = around(rng.random(n) < 0.25)
+    rbb = around(rng.random(n) < 0.25)
+    # edge-touching pairs: the right bbox starts where the left one ends
+    t = rng.random(n) < 0.2
+    rbb[t, 0] = lbb[t, 2]
+    rbb[t, 2] = np.maximum(rbb[t, 2], rbb[t, 0])
+    owner = C.canonical_cell(lbb, rbb, res, max_cells=max_cells)
+
+    def joined_cells(bb, other_res):
+        flat, off = C.bbox_cover(bb[:, 0], bb[:, 1], bb[:, 2], bb[:, 3],
+                                 res, max_cells=max_cells)
+        return [set(C.ancestors(flat[off[i]:off[i + 1]],
+                                int(other_res[i])).ravel())
+                for i in range(len(bb))]
+
+    lres = C.cover_res(*lbb.T, res, max_cells=max_cells)
+    rres = C.cover_res(*rbb.T, res, max_cells=max_cells)
+    assert (lres < res).any() and (rres < res).any() and (lres == res).any()
+    lcells = joined_cells(lbb, rres)
+    rcells = joined_cells(rbb, lres)
+    for i in range(n):
+        assert owner[i] in lcells[i] and owner[i] in rcells[i], i
+    assert (C.cell_res(owner) == np.minimum(lres, rres)).all()
